@@ -54,6 +54,22 @@ def test_minhash_lsh_finds_exact_dup(spark):
     assert all(j >= 0.9 for j in got.values())
 
 
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+def test_minhash_verify_rejects_non_positive_threshold(spark, threshold):
+    # the join-count verify never sees jaccard-0 pairs, so a threshold
+    # <= 0 cannot be honoured: both verify tails refuse it
+    from pyspark.sql import functions as F
+
+    from yfinance_etl_spark.operators.dedup import minhash_delta_neardup_split
+
+    with pytest.raises(ValueError, match="threshold"):
+        minhash_lsh_neardup(_docs(spark), threshold=threshold)
+    with pytest.raises(ValueError, match="threshold"):
+        minhash_delta_neardup_split(
+            _docs(spark), F.col("doc_id") < 2, threshold=threshold
+        )
+
+
 def test_cosine_matches_numpy(spark):
     a = [1.0, 2.0, 3.0]
     b = [-1.0, 0.5, 2.0]

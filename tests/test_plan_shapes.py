@@ -270,6 +270,18 @@ def test_price_band_join_broadcasts_intervals(spark):
     assert plan.count("Exchange rangepartitioning") == 0, plan
 
 
+def test_driver_tables_are_local_table_scans(spark):
+    # driver-built tables (catalog.local_frame) plan as a JVM
+    # LocalTableScan, not a Python-RDD "Scan ExistingRDD" that starts a
+    # Python worker per core (bpe_tokenize's checkpointed vocab is the
+    # one ExistingRDD its plan keeps)
+    for name in ("price_band_join", "peer_group_lookup", "bpe_tokenize"):
+        plan = _plan(spark, name)
+        assert "LocalTableScan" in plan, (name, plan)
+    for name in ("price_band_join", "peer_group_lookup"):
+        assert "Scan ExistingRDD" not in _plan(spark, name), name
+
+
 def test_order_value_deciles_shares_priority_shuffle(spark):
     # both rank windows and the ntile window partition by o_orderpriority,
     # so they ride ONE exchange; the only other exchange is the final

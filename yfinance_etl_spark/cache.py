@@ -42,11 +42,13 @@ def cache_shared_stages(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
 
     Returns the cached frames (call ``unpersist()`` on them to release).
     """
-    cached = [
-        daily_bars(load_table(spark, sf_dir, "lineitem")),
-        doc_shingles(load_table(spark, sf_dir, "documents")),
+    # base entries, keyed by name: the derived chains below wait on their
+    # upstreams by these keys, so reordering entries cannot rewire them
+    base = {
+        "daily_bars": daily_bars(load_table(spark, sf_dir, "lineitem")),
+        "doc_shingles": doc_shingles(load_table(spark, sf_dir, "documents")),
         # map-only but md5-dense: shared by the MinHash and SimHash queries
-        doc_hashes(load_table(spark, sf_dir, "documents")),
+        "doc_hashes": doc_hashes(load_table(spark, sf_dir, "documents")),
         # the DIGEST character-gram frame (doc_id, pos, xxhash64(gm),
         # unhex(md5(gm))) every ExactSubstr-family match join rebuilds —
         # and rebuilds TWICE per query, once per side of the gram-hash
@@ -62,12 +64,12 @@ def cache_shared_stages(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         # ~7 s uncached — the hashed form is flat, with spans ~2× faster
         # than uncached). Consumers project the digest they need off the
         # shared frame; InMemoryTableScan prunes the other column.
-        hashed_grams(load_table(spark, sf_dir, "documents")),
+        "hashed_grams": hashed_grams(load_table(spark, sf_dir, "documents")),
         # chunk+embed is the pandas-UDF stage both RAG queries share
-        chunk_embeddings(load_table(spark, sf_dir, "documents")),
+        "chunk_embeddings": chunk_embeddings(load_table(spark, sf_dir, "documents")),
         # whole-doc embeddings: computed on BOTH branches of the
         # embedding-cosine dedup self-join unless cached
-        doc_embeddings(load_table(spark, sf_dir, "documents")),
+        "doc_embeddings": doc_embeddings(load_table(spark, sf_dir, "documents")),
         # the four MODALITY SIGNATURE frames (r17, VERDICT item 1): each is
         # the synthesize→decode→signature mapInPandas chain that the
         # standalone dedup queries AND both training-mix capstones rebuild —
@@ -82,17 +84,19 @@ def cache_shared_stages(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         # (capstones −3.2/−5.3 alone). At 100 TB this is the guide-§8
         # decide-on-small-rows discipline applied across queries: decode
         # once, share the signature proxy, never re-decode the payload.
-        image_dhash(synthesize_png_assets(load_table(spark, sf_dir, "documents"))),
-        audio_fingerprint(
+        "image_dhash": image_dhash(
+            synthesize_png_assets(load_table(spark, sf_dir, "documents"))
+        ),
+        "audio_fingerprint": audio_fingerprint(
             synthesize_audio_fp_assets(load_table(spark, sf_dir, "documents"))
         ),
-        video_frame_dhash(
+        "video_frame_dhash": video_frame_dhash(
             synthesize_video_assets(load_table(spark, sf_dir, "documents"))
         ),
-        audio_frame_fingerprint(
+        "audio_frame_fingerprint": audio_frame_fingerprint(
             synthesize_audio_seq_assets(load_table(spark, sf_dir, "documents"))
         ),
-    ]
+    }
     # the inverted-index self-join the pair/clustering/graph queries
     # build on — cached UNFILTERED (r14) so thresholded consumers
     # substitute Filter(InMemoryRelation) and the contrastive-pair
@@ -126,8 +130,8 @@ def cache_shared_stages(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     lsh_pairs = minhash_lsh_pairs_plan(
         load_table(spark, sf_dir, "documents"), threshold=0.7
     )
-    derived = [pairs, bands, lsh_pairs]
-    for df in [*cached, *derived]:
+    cached = [*base.values(), pairs, bands, lsh_pairs]
+    for df in cached:
         df.cache()
     # Materialize eagerly so queries only ever read memory — with
     # DEPENDENCY-DRIVEN overlap (r17; the r16 two-wave barriers cost the
@@ -141,23 +145,22 @@ def cache_shared_stages(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     # minhash_bands ON doc_hashes; lsh_pairs ON bands + doc_shingles.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(cached) + 2) as pool:
-        futs = [pool.submit(df.count) for df in cached]
-        f_shingles, f_hashes = futs[1], futs[2]  # positions in `cached` above
+    with ThreadPoolExecutor(max_workers=len(base) + 2) as pool:
+        futs = {name: pool.submit(df.count) for name, df in base.items()}
 
         def _pairs_chain():
-            f_shingles.result()
+            futs["doc_shingles"].result()
             pairs.count()
 
         def _lsh_chain():
-            f_hashes.result()
+            futs["doc_hashes"].result()
             bands.count()
-            f_shingles.result()
+            futs["doc_shingles"].result()
             lsh_pairs.count()
 
-        for f in [*futs, pool.submit(_pairs_chain), pool.submit(_lsh_chain)]:
+        chains = [pool.submit(_pairs_chain), pool.submit(_lsh_chain)]
+        for f in [*futs.values(), *chains]:
             f.result()
-    cached.extend(derived)
     return cached
 
 

@@ -1,18 +1,29 @@
-"""Table loaders for the driver testdata (TESTDATA.md).
+"""Table loaders for the test data (TESTDATA.md), and the one way
+driver-side rows become a DataFrame.
 
 All reads are plain ``spark.read.parquet`` so Catalyst gets the parquet footer
 statistics, column pruning, and predicate pushdown for free. At 100 TB these
 tables would be written ``partitionBy`` their natural key (see sources/sink.py);
 the loaders don't care — partition pruning comes from the path layout.
+
+Small tables built on the driver (price bands, peer groups, centroids,
+token ids, shard offsets, questions) go through :func:`local_frame` and
+nothing else: it plans them as a JVM ``LocalTableScan``. A plain
+``spark.createDataFrame(rows, ddl)`` would back them with a parallelized
+Python RDD instead, and every job reading such a table pays one Python
+worker task per core before it does any work.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, _make_type_verifier
 
 TABLES = (
     "region",
@@ -80,14 +91,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` plans work too."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str
+) -> DataFrame:
+    """Driver rows → a DataFrame with schema ``ddl``, planned as a JVM
+    ``LocalTableScan`` (no Python worker reads it).
+
+    The rows are checked against the schema with the verifier
+    ``createDataFrame(rows, ddl)`` applies, so a wrong-typed value (a str
+    in a double column, a float in a bigint column, an int past the int
+    range) raises instead of being coerced. They then become one
+    ``pyarrow.Table`` with the DDL's Arrow schema. Spark turns an Arrow
+    table into a LocalRelation (a JVM-side RDD past
+    ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB), never a
+    Python RDD, and has no non-Arrow fallback for it.
+    """
+    schema = StructType.fromDDL(ddl)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def non_empty(df: DataFrame) -> DataFrame | None:

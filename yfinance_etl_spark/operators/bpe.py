@@ -77,6 +77,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yfinance_etl_spark.catalog import local_frame
+
 #: terminal end-of-word symbol (Sennrich et al. 2016 §3.2)
 EOW = "</w>"
 
@@ -345,18 +347,10 @@ def bpe_learn(
     # both ways; the corpus itself never moves after the step-0 collapse)
     word_freq = [(r[0], int(r[1])) for r in vocab0.select("word", "freq").collect()]
     out_rows, final = _learn_driver(word_freq, n_merges)
-
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "word": [w for w, _ in word_freq],
-            "freq": [f for _, f in word_freq],
-            "syms": [final[w] for w, _ in word_freq],
-        }
-    )
-    vocab = docs.sparkSession.createDataFrame(
-        pdf, "word string, freq bigint, syms array<string>"
+    vocab = local_frame(
+        docs.sparkSession,
+        [(w, f, final[w]) for w, f in word_freq],
+        "word string, freq bigint, syms array<string>",
     ).localCheckpoint(eager=True)
     return BpeModel(tuple(out_rows), vocab, alphabet)
 
@@ -395,14 +389,6 @@ def _relational_rounds(
     return out_rows, vocab
 
 
-def _bpe_learn(
-    docs: DataFrame, n_merges: int, text_col: str, tier: str = "driver"
-) -> tuple[list[tuple], DataFrame]:
-    """Back-compat shim: (merge rows, final vocab frame)."""
-    m = bpe_learn(docs, n_merges, text_col, tier=tier)
-    return list(m.merges), m.vocab
-
-
 def bpe_merges(
     docs: DataFrame,
     n_merges: int = 8,
@@ -418,8 +404,9 @@ def bpe_merges(
     tokenizer instead of re-learning — the split-form cache rule."""
     if model is None:
         model = bpe_learn(docs, n_merges, text_col, tier=tier)
-    return docs.sparkSession.createDataFrame(
-        list(model.merges),
+    return local_frame(
+        docs.sparkSession,
+        model.merges,
         "merge_rank int, lhs string, rhs string, new_symbol string, "
         "pair_count bigint",
     )
@@ -526,9 +513,7 @@ def bpe_tokenize(
     ids = model.token_ids()
     spark = docs.sparkSession
     id_table = F.broadcast(
-        spark.createDataFrame(
-            sorted(ids.items()), "token string, token_id int"
-        )
+        local_frame(spark, sorted(ids.items()), "token string, token_id int")
     )
     words = (
         docs.select(

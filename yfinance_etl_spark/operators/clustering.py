@@ -44,6 +44,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yfinance_etl_spark.catalog import local_frame
 from yfinance_etl_spark.functions.scalar import STAT_SCALE, dsum
 
 #: decimals kept for distances and centroid coordinates (cross-engine anchor)
@@ -260,7 +261,8 @@ def kmeans(
                 break
     # final assignment under the final centroids (standard Lloyd reporting)
     assigned = assign(vecs, centroids)
-    cent_df = vecs.sparkSession.createDataFrame(
+    cent_df = local_frame(
+        vecs.sparkSession,
         [(int(cid), [float(x) for x in coords]) for cid, coords in centroids],
         "cent_id long, cent array<double>",
     )

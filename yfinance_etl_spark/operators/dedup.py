@@ -504,6 +504,14 @@ def minhash_lsh_pairs_plan(docs: DataFrame, threshold: float = 0.7) -> DataFrame
     return _lsh_verify_tail(docs, cand, threshold)
 
 
+def _positive_threshold(threshold: float) -> None:
+    """The join-count verify only sees pairs sharing at least one
+    shingle, so it can never emit a jaccard-0 pair: a threshold <= 0
+    would silently return fewer rows than it asks for."""
+    if not threshold > 0:
+        raise ValueError(f"verify threshold must be > 0, got {threshold!r}")
+
+
 def _lsh_verify_tail(
     docs: DataFrame, cand: DataFrame, threshold: float
 ) -> DataFrame:
@@ -520,7 +528,8 @@ def _lsh_verify_tail(
     design), where collect_set paid a duplicated ObjectHashAggregate
     over the full shingle frame once per verify-join side. Every
     ``doc_shingles`` reference reads the shared cache entry when
-    resident."""
+    resident. Raises ValueError for ``threshold <= 0``."""
+    _positive_threshold(threshold)
     sh = doc_shingles(docs)
     sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -756,7 +765,9 @@ def _delta_verify_tail(cand: DataFrame, sh_new: DataFrame,
     both sides of every crawl/delta/stream consumer (the inner joins
     against candidate ids restrict them to candidate volume anyway;
     the old semi-filter-then-collect shape did the restriction before
-    an aggregation the cache could never pin)."""
+    an aggregation the cache could never pin). Raises ValueError for
+    ``threshold <= 0``."""
+    _positive_threshold(threshold)
     na = sh_new.select(F.col("doc_id").alias("new_doc_id"), "shingle")
     cb = sh_corpus.select(F.col("doc_id").alias("corpus_doc_id"), "shingle")
     inter = (

@@ -36,6 +36,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yfinance_etl_spark.catalog import local_frame
 from yfinance_etl_spark.operators.clustering import _sqdist
 from yfinance_etl_spark.operators.similarity import _rank_topk, cosine
 
@@ -528,8 +529,8 @@ def write_ivfpq_index(
         for cid, coords in book
     ]
     write_partitioned(
-        spark.createDataFrame(
-            book_rows, "subspace int, cent_id long, coords array<double>"
+        local_frame(
+            spark, book_rows, "subspace int, cent_id long, coords array<double>"
         ),
         f"{path}/books",
     )
@@ -695,7 +696,8 @@ def split_ivfpq_list(
         ),
         F.col("cent_id").cast("long"),
     )
-    new_cent_df = spark.createDataFrame(
+    new_cent_df = local_frame(
+        spark,
         [
             (id_map[int(r["cent_id"])], [float(x) for x in r["cent"]])
             for r in sub_rows
@@ -729,7 +731,8 @@ def split_ivfpq_list(
         for r in sub_rows
     ]
     write_partitioned(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             sorted(kept_rows + new_cent_rows),
             "cent_id long, cent_vec array<double>",
         ),

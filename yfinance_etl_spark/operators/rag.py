@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType
 
+from yfinance_etl_spark.catalog import local_frame
 from yfinance_etl_spark.operators.similarity import cosine
 from yfinance_etl_spark.operators.partitioning import spread as _spread
 from yfinance_etl_spark.operators.text import chunk_text
@@ -118,7 +119,7 @@ def chunk_embeddings(docs: DataFrame, size: int = 200, overlap: int = 50) -> Dat
 
 
 def questions_df(spark: SparkSession) -> DataFrame:
-    q = spark.createDataFrame(QUESTIONS, "qid int, question string")
+    q = local_frame(spark, QUESTIONS, "qid int, question string")
     return q.select("qid", "question", hash_embed("question").alias("q_emb"))
 
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from yfinance_etl_spark.catalog import local_frame
+
 #: split name → [lo, hi) bucket range out of 100
 DEFAULT_SPLITS = {"train": (0, 80), "val": (80, 90), "test": (90, 100)}
 
@@ -170,7 +172,7 @@ def pack_shards(
         offsets.append((r[pid], running))
         running += r["t"]
     off_df = F.broadcast(
-        items.sparkSession.createDataFrame(offsets, f"{pid} int, {off} long")
+        local_frame(items.sparkSession, offsets, f"{pid} int, {off} long")
     )
     # integer `div`, not double `/`: cumulative weights are longs, and past
     # 2^53 the long->double conversion is inexact — a row whose exclusive

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yfinance_etl_spark.catalog import local_frame
+
 
 def _dot(a, b, dim: int | None = None):
     """Σ a_i·b_i as a left-to-right fold from a 0.0 seed. With ``dim``
@@ -27,8 +29,10 @@ def _dot(a, b, dim: int | None = None):
     the aggregate() fold, so results are bit-identical — instead of an
     interpreted higher-order-function lambda per element (Catalyst does
     not codegen lambda bodies; at ~10⁵–10⁶ in-bucket pairs × 64 dims the
-    interpreter was the per-pair cost). A wrong ``dim`` fails loudly:
-    ANSI mode rejects out-of-range literal array indices."""
+    interpreter was the per-pair cost). ``dim`` must be the vectors'
+    length: a ``dim`` larger than a vector fails loudly (ANSI mode
+    rejects out-of-range array indices), but a ``dim`` smaller than it
+    silently sums only the first ``dim`` products."""
     if dim is None:
         return F.aggregate(
             F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -263,8 +267,8 @@ def ivf_assign(
     ]
     assigned = ivf_assign_to(embeddings, cent_rows)
     cents = F.broadcast(
-        embeddings.sparkSession.createDataFrame(
-            cent_rows, "cent_id long, cent_vec array<double>"
+        local_frame(
+            embeddings.sparkSession, cent_rows, "cent_id long, cent_vec array<double>"
         )
     )
     return assigned, cents
