@@ -992,6 +992,35 @@ def test_semantic_dedup_rejects_degenerate_target_cluster_size(spark):
             semantic_dedup(embs, k=2, iters=1, target_cluster_size=bad)
 
 
+def test_short_dim_raises_in_knn_join_and_semantic_dedup(spark):
+    """A ``dim`` shorter than the vectors fails loudly instead of scoring
+    only a prefix of each vector, and the right ``dim`` returns the rows
+    of the call without one, bit for bit."""
+    import pytest
+
+    from yfinance_etl_spark.operators.clustering import semantic_dedup
+    from yfinance_etl_spark.operators.similarity import knn_join
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")  # 64-d
+    with pytest.raises(Exception, match="dim=32"):
+        knn_join(emb, k=3, n_planes=6, dim=32).collect()
+    free = sorted(tuple(r) for r in knn_join(emb, k=3, n_planes=6).collect())
+    checked = sorted(tuple(r) for r in knn_join(emb, k=3, n_planes=6, dim=64).collect())
+    assert checked == free and len(free) > 0
+
+    embs = spark.createDataFrame(
+        [(0, [10.0, 0.0]), (1, [0.0, 10.0]), (2, [10.0, 0.1]), (3, [0.0, 9.9])],
+        "vec_id bigint, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="dim=1"):
+        semantic_dedup(embs, k=2, iters=1, tau=0.99, dim=1).collect()
+    free = sorted(tuple(r) for r in semantic_dedup(embs, k=2, iters=1, tau=0.99).collect())
+    unrolled = sorted(
+        tuple(r) for r in semantic_dedup(embs, k=2, iters=1, tau=0.99, dim=2).collect()
+    )
+    assert unrolled == free and len(free) > 0
+
+
 def test_predicate_split_operators_route_null_predicate_rows_to_candidate_side(spark):
     """NULL contract (ADVICE r10): a row whose split predicate evaluates
     NULL must land on the candidate/corpus side — never silently vanish

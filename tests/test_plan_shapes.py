@@ -88,6 +88,48 @@ def test_cache_substitution_hits_memory(spark):
         uncache_all(cached)
 
 
+def test_minhash_lsh_neardup_is_one_lazy_plan_the_cache_substitutes(spark):
+    # uncached, the verified pair frame is a plain lazy plan — no
+    # checkpointed candidate frame (a LogicalRDD leaf, Scan ExistingRDD
+    # once planned) — so caching ONE instance makes any later build of the
+    # same call read the InMemoryRelation, with identical rows
+    from yfinance_etl_spark.catalog import load_table
+    from yfinance_etl_spark.operators.dedup import minhash_lsh_neardup
+
+    def build():
+        return minhash_lsh_neardup(load_table(spark, SF, "documents"), threshold=0.7)
+
+    uncached = build()
+    qe = uncached._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+    want = sorted(tuple(r) for r in uncached.collect())
+
+    entry = build().cache()
+    try:
+        entry.count()
+        again = build()
+        assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
+        assert sorted(tuple(r) for r in again.collect()) == want
+    finally:
+        entry.unpersist(blocking=True)
+
+
+def test_operators_never_inspect_the_cache_manager():
+    # one implementation per algorithm: no operator may pick its plan by
+    # asking Spark whether something is cached
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "yfinance_etl_spark" / "operators"
+    hits = [
+        f"{path.name}: {needle}"
+        for path in sorted(root.rglob("*.py"))
+        for needle in ("cacheManager", "lookupCachedData")
+        if needle in path.read_text()
+    ]
+    assert not hits, hits
+
+
 def test_non_empty_guard(spark):
     # P5: empty frame -> None, non-empty frame passes through unchanged
     from yfinance_etl_spark.catalog import load_table, non_empty
@@ -539,13 +581,13 @@ def test_dsir_topk_broadcasts_ratio_table_and_heaps(spark):
 
 
 def test_delta_candidates_is_equi_band_join_never_cartesian(spark):
-    # dedup_delta_snapshot's candidate stage (inspected pre-checkpoint —
-    # the eager localCheckpoint truncates the committed query's plan):
-    # the asymmetric new×corpus pairing is an EQUI join keyed on
-    # (band_id, band_val), so Catalyst plans a hash/sort-merge join —
-    # a cross-set band bucket, never a CartesianProduct — and the
-    # new/corpus sides are FILTERS of the same signature table (the
-    # one-signature-pass claim).
+    # dedup_delta_snapshot's candidate stage (built on uncheckpointed
+    # bands — the committed query checkpoints its signature table, which
+    # truncates the plan): the asymmetric new×corpus pairing is an EQUI
+    # join keyed on (band_id, band_val), so Catalyst plans a
+    # hash/sort-merge join — a cross-set band bucket, never a
+    # CartesianProduct — and the new/corpus sides are FILTERS of the same
+    # signature table (the one-signature-pass claim).
     from pyspark.sql import functions as F
 
     from yfinance_etl_spark.operators.dedup import (
@@ -556,9 +598,7 @@ def test_delta_candidates_is_equi_band_join_never_cartesian(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bands = minhash_bands(docs)
     pred = F.col("doc_id") % 10 < 2
-    cand = _delta_candidates(
-        bands.filter(pred), bands.filter(~pred), checkpoint=False
-    )
+    cand = _delta_candidates(bands.filter(pred), bands.filter(~pred))
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan

@@ -144,14 +144,14 @@ AUDITS: dict[str, str] = {
     ),
     "dedup_delta_snapshot": (
         "ONE full-table signature stage (checkpointed — visible here as "
-        "the plan's LogicalRDD/Scan ExistingRDD leaves: both band-join "
-        "sides and both verify semi-filters read the materialized "
-        "candidates, not a recomputed subtree); the candidate join is an "
-        "EQUI band join on (band_id, band_val) between the new-side and "
-        "corpus-side filters of the same signature table — asymmetric by "
-        "construction, so corpus-internal pairs never form (the "
-        "incremental saving); verify re-shingles only the candidate-id "
-        "semi-filtered slice. No CartesianProduct anywhere."
+        "the plan's Scan ExistingRDD leaves: both band-join sides read "
+        "the materialized signatures, not a recomputed subtree); the "
+        "candidate join is an EQUI band join on (band_id, band_val) "
+        "between the new-side and corpus-side filters of the same "
+        "signature table — asymmetric by construction, so "
+        "corpus-internal pairs never form (the incremental saving); the "
+        "lazy candidate frame is read once, by the verify's "
+        "shingle-count join. No CartesianProduct anywhere."
     ),
     "split_leakage_check": (
         "The split assignment is a pure map-side md5-bucket projection "
@@ -462,7 +462,6 @@ def _stream_delta_microbatch_twin(spark, sf_dir: str):
     return _delta_candidates(
         minhash_bands(docs.filter(pred)),
         minhash_bands(docs.filter(~pred)),
-        checkpoint=False,
     )
 
 
@@ -520,14 +519,6 @@ def main() -> int:
         f"{spark.version}, AQE on). Each section states what the plan must",
         "show — the machine-checked twin of each claim lives in",
         "`tests/test_plan_shapes.py` — followed by `explain(\"formatted\")`.",
-        "",
-        "**r17 drift root cause (VERDICT item 10, controlled)**: the broad",
-        "0.7–0.9× drift on untouched queries is MACHINE STATE, not",
-        "shared-cache storage pressure — `tools/cache_pressure_leg.py` ran",
-        "interleaved fresh-JVM legs with the full r17 entry set vs the",
-        "r16-era set and timed a 12-query panel that touches none of the",
-        "new entries: full/reduced ratios scatter 0.88–1.17 (mean ~0.98,",
-        "no systematic inflation; `bench_drift.json::r17_cache_pressure`).",
         "",
     ]
     sections: list[tuple[str, str, object]] = [

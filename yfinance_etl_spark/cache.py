@@ -23,7 +23,7 @@ from yfinance_etl_spark.operators.dedup import (
     hashed_grams,
     jaccard_pairs,
     minhash_bands,
-    minhash_lsh_pairs_plan,
+    minhash_lsh_neardup,
 )
 from yfinance_etl_spark.multimodal.audio import (
     audio_fingerprint,
@@ -120,14 +120,12 @@ def cache_shared_stages(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     bands = minhash_bands(load_table(spark, sf_dir, "documents"))
     # the VERIFIED MinHash-LSH pair frame at the suite threshold (r17):
     # dedup_minhash_lsh and all four training-mix recipes rebuild this
-    # exact frame per query (~2-3 s each). Cached in its checkpoint-free
-    # canonical form (minhash_lsh_pairs_plan); minhash_lsh_neardup
-    # returns that plan directly when it detects the entry resident
-    # (_plan_is_cached), else falls back to its self-checkpointing
-    # construction — identical rows either way. Builds ON the bands and
-    # shingles entries, hence wave 2. Pair-count-sized output (tiny by
-    # LSH design).
-    lsh_pairs = minhash_lsh_pairs_plan(
+    # exact frame per query (~2-3 s each). minhash_lsh_neardup is one
+    # lazy, checkpoint-free plan, so every later call with the same docs
+    # and threshold is substituted by this entry with no branch in the
+    # operator. Builds ON the bands and shingles entries, hence the
+    # chain below. Pair-count-sized output (tiny by LSH design).
+    lsh_pairs = minhash_lsh_neardup(
         load_table(spark, sf_dir, "documents"), threshold=0.7
     )
     cached = [*base.values(), pairs, bands, lsh_pairs]

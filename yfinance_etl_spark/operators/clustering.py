@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from yfinance_etl_spark.catalog import local_frame
 from yfinance_etl_spark.functions.scalar import STAT_SCALE, dsum
+from yfinance_etl_spark.operators.similarity import _dot, _norm
 
 #: decimals kept for distances and centroid coordinates (cross-engine anchor)
 COORD_DECIMALS = 9
@@ -382,29 +383,10 @@ def semantic_dedup(
     # assigned projects off kmeans's internal checkpoint: no re-embed here
     probed = probe_assign(assigned.select("vec_id", "vec"), centroids, probes)
 
-    # ``dim`` (r17): with the vector dimensionality known statically, the
-    # norm and the per-pair dot product UNROLL into flat codegen'd
-    # arithmetic instead of interpreted higher-order-function folds — the
-    # pair join evaluates millions of 16-term folds per action (the
-    # suite's worst driver-box regression in r16), and Catalyst does not
-    # codegen lambda bodies. The unrolled expression reduces left-to-
-    # right from the same 0.0 seed, i.e. ((0.0 + t0) + t1) + ... —
-    # BIT-IDENTICAL to aggregate()'s fold — so results are unchanged
-    # (oracle-gated). A wrong ``dim`` fails loudly: ANSI mode rejects
-    # out-of-range literal array indices.
-    def _dot(a, b):
-        if dim is None:
-            return F.aggregate(
-                F.zip_with(a, b, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        out = F.lit(0.0)
-        for i in range(dim):
-            out = out + a[i] * b[i]
-        return out
-
-    with_norm = probed.withColumn("norm", F.sqrt(_dot(F.col("vec"), F.col("vec"))))
+    # ``dim`` unrolls the per-pair dot product into flat codegen'd
+    # arithmetic, bit-identical to the fold; _norm raises for a vector of
+    # any other length
+    with_norm = probed.withColumn("norm", _norm(F.col("vec"), dim))
     a = with_norm.withColumn(
         # pmod, not %: a negative vec_id's sign-preserving % salt would
         # match no replica and its pairs would silently vanish
@@ -425,7 +407,7 @@ def semantic_dedup(
         F.col("b.vec_id").alias("vec_id"),
         F.round(
             F.try_divide(
-                _dot(F.col("a.vec"), F.col("b.vec")),
+                _dot(F.col("a.vec"), F.col("b.vec"), dim),
                 F.col("a.norm") * F.col("b.norm"),
             ),
             6,

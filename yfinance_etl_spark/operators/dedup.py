@@ -461,49 +461,6 @@ def dhash_neardup(sig: DataFrame, hamming_max: int = 7) -> DataFrame:
     return cand.filter(F.col("hamming") <= hamming_max).distinct()
 
 
-def _plan_is_cached(df: DataFrame) -> bool:
-    """True iff the frame's analyzed plan has a shared-cache entry (the
-    CacheManager would substitute an InMemoryRelation for it). Used to
-    pick between the checkpoint-free canonical plan (cache-substitutable
-    — checkpoint RDD ids are fresh per call, so a plan containing one
-    can NEVER hit the cache) and the self-materializing checkpointed
-    construction. Purely physical: both forms compute identical rows."""
-    try:
-        return (
-            df.sparkSession._jsparkSession.sharedState()
-            .cacheManager()
-            .lookupCachedData(df._jdf)
-            .isDefined()
-        )
-    except Exception:  # noqa: BLE001 — introspection only; never break a query
-        return False
-
-
-def minhash_lsh_pairs_plan(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
-    """The checkpoint-FREE canonical plan of :func:`minhash_lsh_neardup` —
-    what ``cache_shared_stages`` materializes (r17): the verified pair
-    frame is rebuilt per query by dedup_minhash_lsh AND all four
-    training-mix recipes (~2–3 s × 5 consumers), but the checkpointed
-    construction can never cache-substitute (fresh RDD ids per call).
-    As a lazy plan, `cand` feeds three branches and `sets` two — fine
-    for the ONE setup materialization, pathological per query (which is
-    why the uncached path below checkpoints them instead)."""
-    bands = minhash_bands(docs)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    return _lsh_verify_tail(docs, cand, threshold)
-
-
 def _positive_threshold(threshold: float) -> None:
     """The join-count verify only sees pairs sharing at least one
     shingle, so it can never emit a jaccard-0 pair: a threshold <= 0
@@ -512,42 +469,41 @@ def _positive_threshold(threshold: float) -> None:
         raise ValueError(f"verify threshold must be > 0, got {threshold!r}")
 
 
-def _lsh_verify_tail(
-    docs: DataFrame, cand: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verify over a candidate frame — the JOIN-COUNT shape
-    (r17; the DuckDB oracle's own ``inter`` CTE): matching shingles are
-    counted through two candidate-keyed equi-joins against the shingle
-    frame, and per-doc sizes are a plain count aggregate. Identical
-    values to the earlier per-doc collect_set + array_intersect form —
-    ``doc_shingles`` is distinct, so |set_a ∩ set_b| == the join-count
-    and set sizes == the count aggregate — verified row-for-row on the
-    full frame, and ~1.7× cheaper to execute (interleaved A/B:
-    2.4-4.0 s → 1.3-2.2 s materializing the cache entry): the per-pair
-    shingle fan-out is candidate-pairs × shingles-per-doc (tiny by LSH
-    design), where collect_set paid a duplicated ObjectHashAggregate
-    over the full shingle frame once per verify-join side. Every
-    ``doc_shingles`` reference reads the shared cache entry when
-    resident. Raises ValueError for ``threshold <= 0``."""
+def _verify_jaccard(cand: DataFrame, sh_left: DataFrame, sh_right: DataFrame,
+                    left: str, right: str, threshold: float) -> DataFrame:
+    """Exact-Jaccard verify over a candidate frame (``left``, ``right``,
+    n_shared_bands) — the one verify of the MinHash self-join and delta
+    families, in the DuckDB oracle's JOIN-COUNT shape: matching shingles
+    are counted through two candidate-keyed equi-joins against the
+    shingle frames, and per-doc sizes are plain count aggregates.
+    ``doc_shingles`` is distinct, so the join-count is |set_l ∩ set_r|.
+
+    ``n_shared_bands`` rides the intersection groupBy (it is a function
+    of the pair, so the rows do not change), which makes the candidate
+    frame a single-read input: the lazy plan needs no checkpoint, and the
+    whole plan stays deterministic, so a shared-cache entry of it (or of
+    any ``doc_shingles`` subplan inside it) substitutes passively.
+    Returns (left, right, n_shared_bands, jaccard). Raises ValueError
+    for ``threshold <= 0``."""
     _positive_threshold(threshold)
-    sh = doc_shingles(docs)
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    sl = sh_left.select(F.col("doc_id").alias(left), "shingle")
+    sr = sh_right.select(F.col("doc_id").alias(right), "shingle")
     inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
+        cand.join(sl, left)
+        .join(sr, [right, "shingle"])
+        .groupBy(left, right, "n_shared_bands")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__sz"))
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("__sz").alias("__sa"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("__sz").alias("__sb"))
-    jac = F.col("__c") / (F.col("__sa") + F.col("__sb") - F.col("__c"))
+
+    def sizes(sh: DataFrame, id_col: str, size_col: str) -> DataFrame:
+        agg = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__sz"))
+        return agg.select(F.col("doc_id").alias(id_col), F.col("__sz").alias(size_col))
+
+    jac = F.col("__c") / (F.col("__sl") + F.col("__sr") - F.col("__c"))
     return (
-        cand.join(inter, ["doc_a", "doc_b"])
-        .join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select("doc_a", "doc_b", "n_shared_bands", F.round(jac, 6).alias("jaccard"))
+        inter.join(sizes(sh_left, left, "__sl"), left)
+        .join(sizes(sh_right, right, "__sr"), right)
+        .select(left, right, "n_shared_bands", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -558,22 +514,10 @@ def minhash_lsh_neardup(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     Only same-bucket docs are joined (the LSH point); exact Jaccard then runs
     on the tiny candidate set. Returns (doc_a, doc_b, n_shared_bands, jaccard).
 
-    The verify step is candidate-local (``_lsh_verify_tail``, the oracle's
-    join-count shape): matching shingles are counted through candidate-
-    keyed equi-joins, so cost scales with the CANDIDATE set (LSH keeps it
-    tiny), not the corpus — the full inverted-index re-join the earlier
-    shape paid is gone.
-
-    r17: when the checkpoint-free canonical plan is resident in the shared
-    cache (bench setup pins it — 5 suite consumers rebuild this exact
-    frame), return that plan directly: the InMemoryRelation IS the
-    materialization, so the per-branch re-execution the checkpoint exists
-    to prevent never happens. Otherwise (oracle/test/ad-hoc sessions)
-    checkpoint ``cand``, which feeds three plan branches. Identical rows
-    on both paths — the choice is purely physical."""
-    lazy = minhash_lsh_pairs_plan(docs, threshold)
-    if _plan_is_cached(lazy):
-        return lazy
+    One lazy plan, no eager action: the candidate frame is read once, by
+    ``_verify_jaccard``'s intersection join. ``cache_shared_stages`` caches
+    this very call at the suite threshold, so when that entry is resident
+    the CacheManager swaps the whole plan for its InMemoryRelation."""
     bands = minhash_bands(docs)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -586,11 +530,9 @@ def minhash_lsh_neardup(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
         )
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-        # the candidate set feeds THREE plan branches (result join + the two
-        # semi-filter sides); materialize it once — it is tiny by LSH design
-        .localCheckpoint(eager=True)
     )
-    return _lsh_verify_tail(docs, cand, threshold)
+    sh = doc_shingles(docs)
+    return _verify_jaccard(cand, sh, sh, "doc_a", "doc_b", threshold)
 
 
 def contamination_overlap(
@@ -692,18 +634,17 @@ def minhash_delta_neardup(
     (``write_minhash_signatures`` — a (doc_id, band_id, band_val)
     parquet, linear in corpus size, through the S10 sink) and passed
     back here as ``corpus_bands`` (``read_minhash_signatures``), so each
-    incremental run pays signature computation for the DELTA alone;
-    ``corpus_docs`` is then touched only by the verify stage, which
-    re-shingles just the candidate slice (semi-join first — candidate
-    count, not corpus size). Omitting ``corpus_bands`` computes
-    signatures in-memory (the test/ad-hoc form). The band join is
-    asymmetric (new × corpus), so the corpus's internal near-dup
-    structure — already resolved in previous runs — generates ZERO
-    candidate pairs; a union self-join would re-derive all of it every
-    snapshot, quadratically in snapshot count. Verify = exact Jaccard
-    over candidates only, shingle sets semi-filtered per side (the
-    self-join tier's pattern), so cross-set verify cost tracks true
-    cross-set duplication.
+    incremental run pays signature computation for the DELTA alone.
+    Omitting ``corpus_bands`` computes signatures in-memory (the
+    test/ad-hoc form). The band join is asymmetric (new × corpus), so
+    the corpus's internal near-dup structure — already resolved in
+    previous runs — generates ZERO candidate pairs; a union self-join
+    would re-derive all of it every snapshot, quadratically in snapshot
+    count. Verify = ``_verify_jaccard``, the self-join tier's exact
+    Jaccard: the shingle joins run at candidate volume, but
+    ``corpus_docs`` is still shingled in full, for the per-doc size
+    aggregate and the full-table ``doc_shingles`` subplan the shared
+    cache entry substitutes for.
 
     NEW docs also duplicating EACH OTHER are the self-join tier's job on
     the delta (tiny); the composition delta-self + delta-vs-corpus is
@@ -722,20 +663,18 @@ def minhash_delta_neardup(
     # recompute it cold (measured ~2×7 s inside crawl_frontier_cycle).
     if new_bands is None:
         new_bands = minhash_bands(new_docs)
-    cand = _delta_candidates(new_bands, corpus_bands)
-    return _delta_verify_tail(
-        cand, doc_shingles(new_docs), doc_shingles(corpus_docs), threshold
+    return _verify_jaccard(
+        _delta_candidates(new_bands, corpus_bands),
+        doc_shingles(new_docs), doc_shingles(corpus_docs),
+        "new_doc_id", "corpus_doc_id", threshold,
     )
 
 
-def _delta_candidates(nb: DataFrame, cb: DataFrame,
-                      checkpoint: bool = True) -> DataFrame:
+def _delta_candidates(nb: DataFrame, cb: DataFrame) -> DataFrame:
     """Asymmetric cross-set band join → (new_doc_id, corpus_doc_id,
-    n_shared_bands); checkpointed because it feeds three branches (result
-    join + two semi-filters) and is tiny by LSH design.
-    ``checkpoint=False`` exists for the plan-shape pins only — the
-    checkpoint truncates the physical plan the tests need to inspect."""
-    cand = (
+    n_shared_bands), lazy: ``_verify_jaccard`` reads it once, and the
+    raw-candidate stream writes it once per micro-batch."""
+    return (
         nb.alias("n")
         .join(
             cb.alias("c"),
@@ -747,51 +686,6 @@ def _delta_candidates(nb: DataFrame, cb: DataFrame,
             F.col("c.doc_id").alias("corpus_doc_id"),
         )
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    return cand.localCheckpoint(eager=True) if checkpoint else cand
-
-
-def _delta_verify_tail(cand: DataFrame, sh_new: DataFrame,
-                       sh_corpus: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verify over an asymmetric candidate frame — the
-    JOIN-COUNT shape (r17, the ``_lsh_verify_tail`` rewrite applied to
-    the delta family): matching shingles are counted through two
-    candidate-keyed equi-joins and per-doc sizes are plain count
-    aggregates. Identical values to the previous per-doc collect_set +
-    array_intersect form (``doc_shingles`` is distinct), cheaper to
-    execute (no duplicated ObjectHashAggregate per verify side), and —
-    the family-wide point — both shingle references are now FULL-TABLE
-    ``doc_shingles`` subplans, so the shared cache entry substitutes on
-    both sides of every crawl/delta/stream consumer (the inner joins
-    against candidate ids restrict them to candidate volume anyway;
-    the old semi-filter-then-collect shape did the restriction before
-    an aggregation the cache could never pin). Raises ValueError for
-    ``threshold <= 0``."""
-    _positive_threshold(threshold)
-    na = sh_new.select(F.col("doc_id").alias("new_doc_id"), "shingle")
-    cb = sh_corpus.select(F.col("doc_id").alias("corpus_doc_id"), "shingle")
-    inter = (
-        cand.join(na, "new_doc_id")
-        .join(cb, ["corpus_doc_id", "shingle"])
-        .groupBy("new_doc_id", "corpus_doc_id")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    za = sh_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__sa")).select(
-        F.col("doc_id").alias("new_doc_id"), "__sa"
-    )
-    zb = sh_corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__sb")).select(
-        F.col("doc_id").alias("corpus_doc_id"), "__sb"
-    )
-    jac = F.col("__c") / (F.col("__sa") + F.col("__sb") - F.col("__c"))
-    return (
-        cand.join(inter, ["new_doc_id", "corpus_doc_id"])
-        .join(za, "new_doc_id")
-        .join(zb, "corpus_doc_id")
-        .select(
-            "new_doc_id", "corpus_doc_id", "n_shared_bands",
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -819,7 +713,7 @@ def minhash_delta_neardup_split(
     bands = minhash_bands(docs).localCheckpoint(eager=True)
     cand = _delta_candidates(bands.filter(new_pred), bands.filter(~new_pred))
     sh = doc_shingles(docs)
-    return _delta_verify_tail(cand, sh, sh, threshold)
+    return _verify_jaccard(cand, sh, sh, "new_doc_id", "corpus_doc_id", threshold)
 
 
 def _fresh_sink_guard(checkpoint_dir: str, out_dir: str, clear_sink: bool) -> None:
@@ -946,8 +840,10 @@ def delta_neardup_stream(
     (map-only minhash over the batch), band equi-join against
     ``corpus_bands`` (in production ``read_minhash_signatures`` over the
     persisted, band_id-partitioned parquet — the planner sizes broadcast
-    vs shuffle per batch from the static side's real size), verify
-    re-shingles only the candidate slice of ``corpus_docs``.
+    vs shuffle per batch from the static side's real size), then the
+    shared ``_verify_jaccard``: its shingle joins run at candidate
+    volume, but its per-doc size aggregate still shingles all of
+    ``corpus_docs`` every batch.
     Reference analog: the re-download-and-recompute loop
     (streamlit_app.py:819-822) is the batch antipattern this replaces.
     """
@@ -957,9 +853,7 @@ def delta_neardup_stream(
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         if corpus_docs is None:
-            out = _delta_candidates(
-                minhash_bands(batch_df), corpus_bands, checkpoint=False
-            )
+            out = _delta_candidates(minhash_bands(batch_df), corpus_bands)
         else:
             out = minhash_delta_neardup(
                 batch_df, corpus_docs, threshold, corpus_bands=corpus_bands

@@ -28,11 +28,11 @@ def _dot(a, b, dim: int | None = None):
     arithmetic — ((0.0 + t0) + t1) + …, the exact evaluation order of
     the aggregate() fold, so results are bit-identical — instead of an
     interpreted higher-order-function lambda per element (Catalyst does
-    not codegen lambda bodies; at ~10⁵–10⁶ in-bucket pairs × 64 dims the
-    interpreter was the per-pair cost). ``dim`` must be the vectors'
-    length: a ``dim`` larger than a vector fails loudly (ANSI mode
-    rejects out-of-range array indices), but a ``dim`` smaller than it
-    silently sums only the first ``dim`` products."""
+    not codegen lambda bodies). semantic_dedup's 16-dim per-pair product
+    unrolls; knn_join's 64-dim one keeps the fold, which measured faster
+    there. ``dim`` must be the vectors' length. The unrolled sum does
+    not check it, so a caller passes every vector through ``_norm`` with
+    the same ``dim`` first."""
     if dim is None:
         return F.aggregate(
             F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -43,6 +43,23 @@ def _dot(a, b, dim: int | None = None):
     return out
 
 
+def _norm(v, dim: int | None = None):
+    """sqrt(v·v) by the fold, computed once per vector so per-pair work
+    is one dot product. With ``dim``, a non-NULL vector of any other
+    length raises here, so a per-pair ``_dot(a, b, dim)`` never sums a
+    prefix of it. The check sits here, once per vector, because inside
+    the per-pair ``_dot`` it made semantic_dedup about 8x slower at sf0.1
+    on 4 vCPUs, and unrolling a 64-dim norm next to it doubled
+    knn_join's wall. A NULL vector gives NULL."""
+    norm = F.sqrt(_dot(v, v))
+    if dim is None:
+        return norm
+    return F.when(
+        F.array_size(v) != dim,
+        F.raise_error(F.lit(f"vector length differs from dim={dim}")),
+    ).otherwise(norm)
+
+
 def cosine(a, b):
     """Cosine similarity, NULL for a zero-norm side: under this session's
     ANSI-on Spark 4 default a plain `/` raises a job-aborting
@@ -51,9 +68,7 @@ def cosine(a, b):
     candidates. try_divide yields NULL instead — which is also exactly
     what the DuckDB oracle computes for x/0, and bit-identical to `/`
     whenever the norms are nonzero."""
-    na = F.sqrt(_dot(a, a))
-    nb = F.sqrt(_dot(b, b))
-    return F.try_divide(_dot(a, b), na * nb)
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -468,7 +483,11 @@ def knn_join(
     volume. Pairs colliding in several bands are collapsed (distinct on
     the deterministic scored row) before ranking, so ranks are
     band-multiplicity-independent. Unbanded output == bands=None, and
-    the two knobs compose."""
+    the two knobs compose.
+
+    ``dim``, the vectors' length when known statically, is checked
+    against every vector (``_norm``): a vector of any other length
+    raises."""
     emb = embeddings
     if bands is not None:
         if bands < 1:
@@ -517,10 +536,11 @@ def knn_join(
         )
     # in-bucket pair count is quadratic in occupancy, so per-pair work
     # must be ONE dot product, not three: hoist each vector's norm into
-    # the frame (sqrt(dot(v,v)) is the exact subexpression cosine()
-    # evaluates, so dot/(q_nrm·nrm) under try_divide is bit-identical to
-    # cosine() and every oracle is untouched — the _embed_neardup hoist)
-    b = b.withColumn("nrm", F.sqrt(_dot(F.col("vec"), F.col("vec"))))
+    # the frame (_norm is the exact subexpression cosine() evaluates,
+    # and its dim check changes no value, so dot/(q_nrm·nrm) under
+    # try_divide is bit-identical to cosine() and every oracle is
+    # untouched — the _embed_neardup hoist)
+    b = b.withColumn("nrm", _norm(F.col("vec"), dim))
     left = b.select(
         F.col("vec_id").alias("q_id"), F.col("vec").alias("q_vec"),
         F.col("nrm").alias("q_nrm"), "band", "bucket",

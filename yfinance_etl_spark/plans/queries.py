@@ -914,8 +914,9 @@ def q_stream_delta_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (delta_neardup_stream), and the kept/dropped roll-up — run as ONE
 # query for crawl-day-N: stage the corpus signature parquet, stream the
 # new snapshot through foreachBatch verify (delta-side-only signature
-# compute — the corpus is never re-shingled beyond the candidate slice),
-# read the emitted pair sink back, and label every new doc kept/dropped.
+# compute; the verify still shingles the whole corpus for its per-doc
+# sizes), read the emitted pair sink back, and label every new doc
+# kept/dropped.
 # Reference analog: the repeated re-download loop
 # (streamlit_app.py:819-822) is the full-recompute antipattern this
 # replaces with O(delta) incremental work.
@@ -984,8 +985,8 @@ def q_crawl_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # standing signature store (delta-sized write, band_id layout intact) and
 # day 2 dedups against the GROWN store (corpus ∪ day-1 survivors), so a
 # day-2 near-dup of a day-1 keeper is caught. Signature compute stays
-# O(delta) on BOTH days (monkeypatch-pinned); the corpus is never
-# re-shingled beyond candidate slices. Oracle = the two-day batch
+# O(delta) on BOTH days (monkeypatch-pinned); the verify still shingles
+# the whole corpus for its per-doc sizes. Oracle = the two-day batch
 # recompute: day-1 drops vs corpus, then day-2 drops vs corpus ∪ day-1
 # keepers. Reference analog: the rerun-everything loop
 # (streamlit_app.py:819-822) re-pays the FULL corpus every day.
