@@ -301,3 +301,23 @@ def test_pagerank_invariant_under_partitioning(spark, n_parts):
         tuple(r) for r in pagerank(edges.repartition(n_parts), iters=3).collect()
     )
     assert a == b and len(a) > 0
+
+
+def test_modality_rows_invariant_under_python_fan_out(spark):
+    """The Python stages' fan-out follows row count, so the same rows run
+    as one Python task or as one per core depending on layout. Their
+    output must not: 500 documents signatured in ONE task and forced to
+    four partitions give identical dHash rows."""
+    from yfinance_etl_spark.multimodal.columns import (
+        image_dhash,
+        synthesize_png_assets,
+    )
+    from yfinance_etl_spark.operators.partitioning import spread
+
+    docs = spark.range(0, 500, 1, numPartitions=1).withColumnRenamed("id", "doc_id")
+    assert spread(docs, python=True).rdd.getNumPartitions() == 1
+    a, b = (
+        sorted(tuple(r) for r in image_dhash(synthesize_png_assets(d)).collect())
+        for d in (docs, docs.repartition(4))
+    )
+    assert a == b and len(a) == 500

@@ -115,6 +115,75 @@ def test_minhash_lsh_neardup_is_one_lazy_plan_the_cache_substitutes(spark):
         entry.unpersist(blocking=True)
 
 
+def test_python_stage_fan_out_follows_row_count(spark):
+    # a Python task costs a fixed ~0.27 s of worker CPU, so a Python stage
+    # fans out by row count (1,024 rows per task, capped at one per core)
+    # while a JVM stage still fans out to every core
+    from yfinance_etl_spark.catalog import load_table
+    from yfinance_etl_spark.multimodal.columns import synthesize_png_assets
+    from yfinance_etl_spark.operators.dedup import doc_hashes
+    from yfinance_etl_spark.operators.partitioning import spread
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    docs = load_table(spark, SF, "documents")
+    assert docs.rdd.getNumPartitions() < 4 and docs.count() <= 1024
+    assert "RoundRobinPartitioning" not in plan(synthesize_png_assets(docs))
+    big = spark.range(0, 5000, 1, numPartitions=1).withColumnRenamed("id", "doc_id")
+    assert "RoundRobinPartitioning(4" in plan(synthesize_png_assets(big))
+    # the JVM rule is unchanged: the same 500 rows still spread to 4
+    assert "RoundRobinPartitioning(4" in plan(doc_hashes(docs))
+
+    # an input with a partition per core returns before the count
+    wide = docs.repartition(4)
+    sc = spark.sparkContext._jsc.sc()
+    jobs = sc.dagScheduler().numTotalJobs()
+    assert spread(wide, python=True) is wide
+    assert sc.dagScheduler().numTotalJobs() == jobs
+
+
+def test_spread_does_not_trust_a_coalescible_planned_count(spark):
+    # AQE may coalesce an aggregate's exchange below its planned 4
+    # partitions, so spread reads such an input's count from its RDD: a
+    # small groupBy-ended input still spreads to every core
+    from pyspark.sql import functions as F
+
+    from yfinance_etl_spark.operators.partitioning import spread
+
+    small = (
+        spark.range(0, 100, 1, numPartitions=4)
+        .groupBy((F.col("id") % 10).alias("k"))
+        .count()
+    )
+    plan = spread(small)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning(4" in plan
+
+
+def test_modality_signature_cache_substitutes_with_count_sized_fan_out(spark):
+    # the row-count-sized fan-out is a function of the data, so a rebuilt
+    # synthesize -> dHash chain plans the same and reads the cached frame
+    # (the shared modality-signature entries in cache.py rely on this)
+    from yfinance_etl_spark.catalog import load_table
+    from yfinance_etl_spark.multimodal.columns import (
+        image_dhash,
+        synthesize_png_assets,
+    )
+
+    def build():
+        return image_dhash(synthesize_png_assets(load_table(spark, SF, "documents")))
+
+    want = sorted(tuple(r) for r in build().collect())
+    entry = build().cache()
+    try:
+        entry.count()
+        again = build()
+        assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
+        assert sorted(tuple(r) for r in again.collect()) == want
+    finally:
+        entry.unpersist(blocking=True)
+
+
 def test_operators_never_inspect_the_cache_manager():
     # one implementation per algorithm: no operator may pick its plan by
     # asking Spark whether something is cached

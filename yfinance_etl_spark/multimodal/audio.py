@@ -122,7 +122,9 @@ def synthesize_audio_assets(docs: DataFrame) -> DataFrame:
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "content", "meta"])
 
-    return spread(docs.select("doc_id")).mapInPandas(synth, AUDIO_ASSET_SCHEMA)
+    return spread(docs.select("doc_id"), python=True).mapInPandas(
+        synth, AUDIO_ASSET_SCHEMA
+    )
 
 
 #: fingerprint geometry: 65 equal-ish time frames -> 64 adjacent energy
@@ -177,7 +179,9 @@ def synthesize_audio_fp_assets(docs: DataFrame) -> DataFrame:
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "content", "meta"])
 
-    return spread(docs.select("doc_id")).mapInPandas(synth, AUDIO_ASSET_SCHEMA)
+    return spread(docs.select("doc_id"), python=True).mapInPandas(
+        synth, AUDIO_ASSET_SCHEMA
+    )
 
 
 def audio_fingerprint(assets: DataFrame) -> DataFrame:

@@ -710,7 +710,7 @@ def synthesize_png_assets(docs: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "content", "meta"])
 
-    return spread(docs.select("doc_id")).mapInPandas(
+    return spread(docs.select("doc_id"), python=True).mapInPandas(
         gen,
         "doc_id bigint, content binary, "
         "meta struct<kind: string, width: int, height: int, mime: string>",

@@ -180,7 +180,9 @@ def synthesize_video_assets(docs: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "content", "meta"])
 
-    return spread(docs.select("doc_id")).mapInPandas(gen, VIDEO_ASSET_SCHEMA)
+    return spread(docs.select("doc_id"), python=True).mapInPandas(
+        gen, VIDEO_ASSET_SCHEMA
+    )
 
 
 def video_frame_dhash(assets: DataFrame) -> DataFrame:

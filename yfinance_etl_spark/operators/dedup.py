@@ -766,8 +766,12 @@ def dhash_delta_stream(
     Globally exact with ZERO streaming state for the same reason as the
     text form: a doc's whole signature derives from its single row, so
     a cross pair materializes in exactly one batch — and with no
-    re-verify stage (the word IS the signature) each batch is literally
-    one map stage plus one asymmetric equi-join. Same idempotent
+    re-verify stage (the word IS the signature) each batch is one map
+    stage plus one asymmetric equi-join. When ``sig_fn`` runs a Python
+    stage through ``spread(..., python=True)``, as the image synthesizer
+    does, a micro-batch with fewer partitions than cores also pays one
+    count job, and a batch of up to 1,024 rows computes its signatures in
+    ONE Python task instead of one per core. Same idempotent
     batch_id-scoped sink and fresh-checkpoint/fresh-sink guard as
     ``delta_neardup_stream``; read the sink back with
     ``read_delta_pairs``."""

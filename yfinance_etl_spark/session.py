@@ -7,7 +7,11 @@ chosen for the 1000-executor / 100 TB posture:
 * ``spark.sql.shuffle.partitions`` sized to the local core count here; on a real
   cluster you'd leave AQE's coalescing to right-size it from a high initial value.
 * Arrow enabled so the few pandas-UDF operators (EMA, multimodal decode) move
-  data in columnar batches, never row-at-a-time pickling. Driver rows become a
+  data in columnar batches, never row-at-a-time pickling. A Python stage's
+  task count is a cost of its own: each Python task pays about 0.27 s of
+  worker CPU before its first row, so ``operators.partitioning.spread`` sizes
+  a small input's ``mapInPandas`` fan-out by row count
+  (``spread(df, python=True)``), not by core count. Driver rows become a
   DataFrame only through ``catalog.local_frame``: it hands Spark a
   ``pyarrow.Table``, which plans as a JVM ``LocalTableScan``. A
   ``createDataFrame(rows, ddl)`` table is a Python RDD instead, and every job
